@@ -20,6 +20,8 @@ done
 # SPARK_EXTRA_OPTS: optional -Dspark.* properties (SparkConf reads spark.*
 # system properties), e.g. compression A/B probes:
 #   SPARK_EXTRA_OPTS="-Dspark.rdd.compress=true -Dspark.io.compression.codec=zstd"
+# or the codegen class cache as Spark ships it (graft.util.EngineDefaults):
+#   SPARK_EXTRA_OPTS="-Dspark.sql.codegen.cache.maxEntries=100 -Dspark.sql.codegen.useIdInClassName=true"
 exec java $OPENS -Xmx"${HEAP:-8g}" ${SPARK_EXTRA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"

@@ -42,7 +42,9 @@ object AdSchema {
     */
   val rawDocument: ArrayType = ArrayType(ArrayType(ad))
 
-  /** Strict post-validation schema (ValidatedAd, transform_raw_data.py:32-43). */
+  /** Strict post-validation schema (the reference's ValidatedAd model,
+    * transform_raw_data.py:32-43).
+    */
   val validated: StructType = StructType(Seq(
     StructField("ad_id", StringType, nullable = false),
     StructField("is_active", BooleanType, nullable = false),
@@ -65,20 +67,3 @@ object AdSchema {
   val minEpoch: Long = -62135596800L
   val maxEpoch: Long = 253402300799L
 }
-
-/** Typed veneer over the strict schema (Dataset[ValidatedAd] at the
-  * validation boundary only — SURVEY §1.3).
-  */
-final case class ValidatedAd(
-    ad_id: String,
-    is_active: Boolean,
-    start_date_ts: Long,
-    end_date_ts: Option[Long],
-    total_active_time_sec: Option[Long],
-    ad_group_id: Option[String],
-    grouped_ads_count: Option[Long],
-    display_format: String,
-    media_mix: String,
-    ad_text: String,
-    ad_lang_code: String,
-)

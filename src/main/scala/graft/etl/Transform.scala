@@ -1,9 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.LangId
 
@@ -182,13 +181,5 @@ object Transform {
     val curated = dedup(valid)
       .select(AdSchema.validated.fieldNames.map(col).toIndexedSeq: _*)
     (curated, quarantine)
-  }
-
-  /** Typed veneer at the validation boundary (SURVEY §1.3). */
-  def asValidated(curated: DataFrame)(implicit spark: SparkSession): Dataset[ValidatedAd] = {
-    import spark.implicits._
-    curated
-      .withColumn("start_date_ts", col("start_date_ts").cast(LongType))
-      .as[ValidatedAd]
   }
 }

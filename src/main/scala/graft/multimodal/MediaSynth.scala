@@ -1480,27 +1480,6 @@ object MediaSynth {
     out.toArray
   }
 
-  /** 4:2:2 baseline / progressive and 4:4:0 baseline / progressive — the
-    * round-17 envelope rows; the id's low bit of its 8-quotient decides a
-    * restart-interval twin exactly like the mixed table's gray rows.
-    */
-  def jpegColor422(id: Long): Array[Byte] = jpegColorSampled(id, 2, 1, 0)
-  def jpegColor422Restart(id: Long): Array[Byte] = jpegColorSampled(id, 2, 1, 2)
-  def jpegColor440(id: Long): Array[Byte] = jpegColorSampled(id, 1, 2, 0)
-  def jpegColor440Restart(id: Long): Array[Byte] = jpegColorSampled(id, 1, 2, 2)
-  def jpegColor422Progressive(id: Long): Array[Byte] =
-    jpegColorSampledProgressive(id, 2, 1, 0)
-  def jpegColor440Progressive(id: Long): Array[Byte] =
-    jpegColorSampledProgressive(id, 1, 2, 0)
-
-  /** DRI twin of [[jpegColor420Progressive]] (round-17 verdict #4: color-
-    * progressive fixtures never carried DRI in the mixed table) — same
-    * planted fields and dims, multi-component restart framing in every
-    * scan, pixel-identical by construction.
-    */
-  def jpegColor420ProgressiveRestart(id: Long): Array[Byte] =
-    jpegColorSampledProgressive(id, 2, 2, 2)
-
   /** ARITHMETIC-CODED sequential JPEG (SOF9, T.81 §F / Annex C.15) —
     * a DETECTION-ONLY honesty fixture: the header is spec-true (DQT,
     * SOF9 with planted dims, DAC conditioning, SOS), the entropy body is

@@ -280,7 +280,7 @@ object BpeTrain {
 object BpeTrainMain {
   def main(args: Array[String]): Unit = {
     val out = args(0)
-    val spark = SparkSession.builder()
+    val spark = graft.util.EngineDefaults.withCompression(SparkSession.builder())
       .appName("graft-bpe-train")
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", 32)

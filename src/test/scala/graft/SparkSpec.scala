@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites reuse it via getOrCreate).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.util.EngineDefaults.withCompression(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
